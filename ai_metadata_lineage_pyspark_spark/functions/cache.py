@@ -92,20 +92,3 @@ def release_persisted() -> None:
     while _PERSISTED:
         _PERSISTED.pop().unpersist()
 
-
-def persist_scope_mark() -> int:
-    """Token for `release_persisted_since`: marks the current top of the
-    scoped-persist stack so a nested fit (e.g. the BPE trainer inside
-    `_fitted_bpe_merges`) can release ONLY its own persists."""
-    return len(_PERSISTED)
-
-
-def release_persisted_since(mark: int) -> None:
-    """Unpersist only the DataFrames registered after `mark`. Unlike
-    `release_persisted()` this leaves the cross-query `_MEMO` tier and any
-    earlier scoped persists intact — so a model fit running between two
-    consumers of a memoized subgraph (per-advice r9: bpe_apply_encode
-    between two neardup-label consumers) cannot silently drop the memo
-    and force a recompute."""
-    while len(_PERSISTED) > mark:
-        _PERSISTED.pop().unpersist()

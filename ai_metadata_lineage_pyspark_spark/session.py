@@ -34,9 +34,10 @@ def get_spark(app_name: str = "ai-metadata-lineage-pyspark-spark", shuffle_parti
         # with SPARK_GRAFT_DRIVER_MEM for bigger-SF runs
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # reliable DataFrame.checkpoint() files are NOT deleted by Spark by
-        # default; iterative fits write ~2 per round, so a 100-round evidence
-        # run would leak hundreds of dirs (r10 advice). GC-driven cleanup +
-        # the atexit fallback in ensure_checkpoint_dir keep /tmp bounded.
+        # default; the BPE fit writes one every few rounds and reliable
+        # iter_checkpoint one per round, so long runs would leak dirs.
+        # GC-driven cleanup + the atexit fallback in ensure_checkpoint_dir
+        # keep /tmp bounded.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
     )
@@ -46,10 +47,13 @@ def get_spark(app_name: str = "ai-metadata-lineage-pyspark-spark", shuffle_parti
 def ensure_checkpoint_dir(spark: SparkSession) -> None:
     """Set a RELIABLE checkpoint dir if none is configured (idempotent).
 
-    Iterative fits (bpe_train_merges_incremental) cut their lineage with
-    `DataFrame.checkpoint()` — a replayable on-disk materialization — rather
-    than `localCheckpoint()`, whose executor-memory blocks are lost (and the
-    job with them) on any executor failure mid-iteration. Locally this is a
+    The BPE fit (`operators/search.py::_bpe_fit`) cuts its distributed
+    vocab's lineage with `DataFrame.checkpoint()` — a replayable on-disk
+    materialization — rather than `localCheckpoint()`, whose
+    executor-memory blocks are lost (and the job with them) on any executor
+    failure mid-iteration; its pair counts and merges live on the driver
+    and are not checkpointed. `iter_checkpoint` uses the same dir when
+    SPARK_GRAFT_RELIABLE_CKPT=1. Locally this is a
     temp dir; on a cluster, point SPARK_GRAFT_CHECKPOINT_DIR at HDFS/S3 so
     checkpoints survive executor loss.
     """
@@ -84,10 +88,10 @@ def iter_checkpoint(df, eager: bool = True):
     `DataFrame.checkpoint()` on the checkpoint filesystem
     (SPARK_GRAFT_CHECKPOINT_DIR → HDFS/S3), so an executor loss mid-
     iteration replays from the last round's files instead of failing the
-    job. The incremental BPE fit uses reliable checkpoints UNCONDITIONALLY
-    (its round state is the model being fitted); everything else keeps the
-    local default because the swap is a deploy-time decision, not a
-    per-operator one.
+    job. The BPE fit is the one exception: it reliably checkpoints its
+    distributed vocab UNCONDITIONALLY, while its pair counts and merge
+    table live on the driver. Everything else keeps the local default
+    because the swap is a deploy-time decision, not a per-operator one.
     """
     if os.environ.get("SPARK_GRAFT_RELIABLE_CKPT") == "1":
         ensure_checkpoint_dir(df.sparkSession)

@@ -109,7 +109,7 @@ def test_bpe_fit_preserves_cross_query_memo(spark, sf_dir):
     # collecting the trainer output, which also cleared the _MEMO tier —
     # a bpe fit running between two consumers of the memoized neardup labels
     # silently forced a full MinHash->LSH->label-prop recompute. The fit now
-    # releases only its own scope-marked persists.
+    # persists nothing and releases nothing.
     from ai_metadata_lineage_pyspark_spark.functions.cache import (
         memo_get,
         release_models,

@@ -961,6 +961,67 @@ def test_bpe_incremental_prefix_equals_full_trainer(spark, sf_dir):
     assert all(v[3] > 0 for v in inc.values())
 
 
+def test_bpe_fit_adversarial_vocabulary_matches_oracle_and_guard(
+    spark, tmp_path, monkeypatch
+):
+    # a vocabulary built to stress the driver-held pair table: all 676
+    # two-letter words (676 distinct pairs, all tied at the lowest count),
+    # long single-letter runs (overlapping merges: 'aaaa' under (a, a)),
+    # long distinct words, and a top-count tie between (b, c) and (c, a)
+    # that only the (count, left, right) tie-break resolves. The fit must
+    # equal the DuckDB full-recount spec, sequential and batched, and the
+    # pair-table bound must fail loudly.
+    import itertools
+    import random
+    import string
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ai_metadata_lineage_pyspark_spark.operators import search
+
+    letters = string.ascii_lowercase
+    rng = random.Random(11)
+    texts = [" ".join(a + b for a, b in itertools.product(letters, repeat=2))]
+    texts += [" ".join(c * k for c in "abz" for k in range(2, 14))] * 5
+    texts += [" ".join(["bc", "ca"] * 500)]
+    texts += [
+        " ".join(
+            "".join(rng.choice(letters[3:]) for _ in range(rng.randint(20, 40)))
+            for _ in range(8)
+        )
+        for _ in range(10)
+    ]
+    pq.write_table(pa.table({"text": texts}), str(tmp_path / "documents.parquet"))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM"
+        f" read_parquet('{tmp_path / 'documents.parquet'}')"
+    )
+
+    def spark_rows(df, cols):
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    def oracle_rows(sql, cols):
+        res = con.execute(sql)
+        names = [d[0] for d in res.description]
+        return sorted(tuple(r[names.index(c)] for c in cols) for r in res.fetchall())
+
+    cols = ["round", "left_tok", "right_tok", "merged", "n_occurrences"]
+    got = spark_rows(search._bpe_fit(spark, str(tmp_path), 12, 1), cols)
+    assert len(got) == 12
+    assert got == oracle_rows(search._bpe_train_oracle(12), cols)
+    cols = ["round", "pick", *cols[1:]]
+    got = spark_rows(search._bpe_fit(spark, str(tmp_path), 4, 3), cols)
+    assert got == oracle_rows(search._bpe_batched_ctes(4, 3), cols)
+
+    # the seed count alone holds 676+ distinct pairs
+    monkeypatch.setattr(search, "_bpe_pair_bound", lambda rounds, batch: 100)
+    with pytest.raises(RuntimeError, match="more than 100 token pairs"):
+        search._bpe_fit(spark, str(tmp_path), 2, 1)
+
+
 def test_simhash_vectorized_equals_expression_fold(spark, sf_dir):
     # the vectorized mapInPandas fingerprint (r9 default) must reproduce
     # the expression fold bit-for-bit at BOTH widths: integer +-1 sums are

@@ -31,6 +31,10 @@ FAST_SUBSET = [
     "kmeans_iterate",         # iterative ML, integer-exact Lloyd round
     "incremental_corpus_dedup",  # batch-vs-corpus dedup
     "lexical_search_topk",    # sparse retrieval
+    "bpe_train_merges",       # BPE fit at (6 rounds, 1 merge)
+    "bpe_train_merges_incremental",  # BPE fit at (24, 1)
+    "bpe_train_merges_batched",  # BPE fit at (6, 4)
+    "bpe_apply_encode",       # fitted-tokenizer encoding
 ]
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
